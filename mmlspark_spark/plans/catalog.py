@@ -48,66 +48,50 @@ def register(name: str, oracle: str | None, headline: bool = False, tags: tuple 
 
 
 # Driver correctness-checks a window of the first 50 entries of
-# queries(). Round-16 priority, in order of evidence need (the
-# groups are annotated inline below): (a) the THREE new lanes —
-# never-green oracled queries must be windowed (fairness lint);
-# (b) re-gates for the three lanes whose engine code materially
-# changed this round (BM25 append now brackets its four mutations
-# with the pending/committed crash-ordering markers, which both
-# BM25 append lanes and the streaming ingest exercise; the near-dup
-# screen wrapper gained the empty-first-batch deferral); (c) the 21
-# r12-green lanes the r15 window deferred, at exactly staleness
-# age 4 (the lint bound — the round-15 verdict's "r16 must-window
-# set"); (d) 23 of the 50 r13-green queries (age 3), taken in their
-# r13 window order. The r17 backlog is the 27 remaining r13-green
-# lanes (url_extract, vw_featurizer, anti_join,
-# broadcast_join_revenue, clean_missing, data_conversion,
-# domain_mix, embedding_stats, lang_stats, multi_ngram,
-# ngram_lm_score, page_splitter, pivot_status, quality_score,
-# rollup_counts, semi_join, sessionize, token_count,
-# top_k_per_group, tpch_q2, tpch_q4, tpch_q16, tpch_q19,
-# ts_featurize, unicode_normalize, value_indexer,
-# window_hourly_agg — age 4 at the r17 check, the lint will force
-# them) plus whatever r17 adds.
+# queries(). Round-18 priority, in order of evidence need (the
+# groups are annotated inline below): (a) all 27 oracled lanes
+# whose last driver green is r13 — age 5 at the r18 check, over
+# the lint bound, so the must-window set — in their r13 window
+# order (the key order of CORRECTNESS_r13.json); (b) the remaining
+# 23 slots from the next-oldest block, the 48 r14-green lanes,
+# taken in their r14 window order (the key order of
+# CORRECTNESS_r14.json). The r19 backlog is the 25 remaining
+# r14-green lanes (knn_bruteforce, knn_sq8, knn_sq8_filtered,
+# bm25_search, bm25_phrase_search, hybrid_rrf, semantic_dedup,
+# embedding_kmeans_assign, text_metrics, date_featurize,
+# count_selector, text_preprocessor, repetition_metrics,
+# heavy_hitters, line_dedup, markup_strip, scd2_merge,
+# funnel_steps, group_percentiles, rolling_revenue, pagerank,
+# join_multi, dedup_resolve, sar_affinity, sar_item_similarity —
+# age 5 at the r19 check unless windowed, the lint will force
+# them) plus whatever r18 adds.
 # test_window_rotation_fairness mechanizes all of this: an oracled
 # query whose last driver green would fall more than 4 rounds stale
 # under the planned window fails the lint, as does a new oracled
-# query parked outside the window.
+# query parked outside the window. The lint ages lanes against
+# max(CORRECTNESS_r*) + 1, so landing a round's CORRECTNESS_rN.json
+# means re-planning this window for the next round.
 _WINDOW_PRIORITY = (
-    # (a) the NEW round-16 lanes: the APPEND boundary of the
-    #     embedding and video stored-index lifecycles — with these
-    #     every stored near-dup family has save/append/load/match
-    #     driver-gated (the append matrix is complete) — and the ANN
-    #     streaming-ingest topology (the vector sibling of
-    #     bm25_search_ingested, completing the ingest-topology
-    #     matrix: exact / near-dup / BM25 / ANN)
-    "embedding_match_appended", "video_match_appended",
-    "knn_ivf_ingested",
-    # (b) re-gates: lanes whose engine code changed this round
-    "bm25_search_appended", "bm25_search_ingested",
-    "minhash_screen_incremental",
-    # (c) the r16 must-window set: the 21 r12-green lanes the r15
-    #     window deferred, at exactly age 4 this round
-    "asof_join", "audio_fingerprint_dedup", "class_balancer",
-    "cube_counts", "domain_temperature_mix", "drop_missing",
-    "drop_rename", "ensemble_by_key", "explode_tokens",
-    "image_dhash_dedup", "isolation_forest", "knn_ivf_pretrained",
-    "knn_lsh", "knn_stage", "minhash_dedup",
-    "partition_ops_identity", "tpch_q14", "tpch_q15", "tpch_q17",
-    "tpch_q18", "tpch_q22",
-    # (d) 23 of the 50 r13-green queries (age 3), in r13 window
-    #     order so the r17 plan stays lint-clean mechanically
-    #     (unicode_normalize deferred to the r17 backlog to make
-    #     room for knn_ivf_ingested)
-    "simhash_match_tombstoned", "embedding_match_tombstoned",
-    "video_match_tombstoned", "knn_ivf_tombstoned",
-    "knn_ivf_compacted", "bm25_search_compacted",
-    "exact_match_indexed", "exact_match_tombstoned", "lambda_stage",
-    "minibatch_roundtrip", "multi_column_adapter", "pii_redact",
-    "range_join", "select_project", "sequence_packing",
-    "simhash_dedup", "stratified_repartition", "summarize_data",
-    "tabular_shap_exact", "text_featurize_pipeline", "tpch_q9",
-    "tpch_q11", "udf_transformer",
+    # (a) the r18 must-window set: the 27 r13-green lanes, at age 5
+    #     this round, in r13 window order
+    "unicode_normalize", "url_extract", "vw_featurizer", "anti_join",
+    "broadcast_join_revenue", "clean_missing", "data_conversion",
+    "domain_mix", "embedding_stats", "lang_stats", "multi_ngram",
+    "ngram_lm_score", "page_splitter", "pivot_status",
+    "quality_score", "rollup_counts", "semi_join", "sessionize",
+    "token_count", "top_k_per_group", "tpch_q2", "tpch_q4",
+    "tpch_q16", "tpch_q19", "ts_featurize", "value_indexer",
+    "window_hourly_agg",
+    # (b) 23 of the 48 r14-green queries (age 4), in r14 window
+    #     order so the r19 plan stays lint-clean mechanically
+    "exact_match_incremental", "minhash_match_appended",
+    "hybrid_rrf_indexed", "knn_ivf_appended", "ann_recall",
+    "dedup_recall", "dsir_select", "embedding_dedup", "exact_dedup",
+    "incremental_dedup", "knn_ivf", "knn_matryoshka",
+    "knn_matryoshka_sq8", "knn_pq_adc", "ngram_jaccard",
+    "perplexity_prune", "tabular_lime_exact", "tpch_q20", "tpch_q21",
+    "bpe_merges_small", "knn_ivfpq_indexed", "knn_ivf_filtered",
+    "knn_ivfpq",
 )
 # exactly 50 entries — the driver window size; a 51st would be
 # silently parked outside
