@@ -20,6 +20,7 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+CODEGEN_CACHE_ENTRIES = 8192
 
 
 def get_spark(app_name: str = "mmlspark_spark", cpus: int | None = None) -> SparkSession:
@@ -43,6 +44,12 @@ def get_spark(app_name: str = "mmlspark_spark", cpus: int | None = None) -> Spar
         # at any scale factor. Scale-independent: this is driver-side
         # constant overhead, not a data-sized cost.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Hold the engine's whole generated-class working set. Spark's
+        # default of 100 entries is smaller than the classes one pass
+        # over the headline lanes compiles, so a warm pass evicted and
+        # recompiled them (Janino, then JIT) on every call. Static:
+        # only a session built here gets it (sizing in DESIGN.md).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .getOrCreate()
@@ -52,7 +59,9 @@ def get_spark(app_name: str = "mmlspark_spark", cpus: int | None = None) -> Spar
 def configure_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to an externally-created
     session (e.g. the verification driver's). Only touches confs that can
-    change post-start."""
+    change post-start: static ones, such as the codegen cache size
+    ``get_spark`` sets, are fixed when the session is built, and a
+    foreign session keeps whatever its builder chose."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")

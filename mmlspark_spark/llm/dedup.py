@@ -37,6 +37,7 @@ from mmlspark_spark.llm.index_common import (
     _file_append_committed,
     _write_committed_marker,
     _parquet_row_count,
+    _read_store,
     _read_tombstones,
     _refuse_save_over_torn_append,
     _refuse_tombstoned_append,
@@ -397,7 +398,7 @@ class MinHashLSHDeduplicator(Transformer):
             spark, path, "MinHashLSHDeduplicator.save_index")
         self.signatures(docs).write.mode(mode).parquet(
             f"{path}/signatures")
-        sigs = spark.read.parquet(f"{path}/signatures")
+        sigs = _read_store(spark, f"{path}/signatures")
         (self._banded(sigs)
          .repartition(F.col("__bandhash"))
          .sortWithinPartitions("__band", "__bandhash")
@@ -486,8 +487,8 @@ class MinHashLSHDeduplicator(Transformer):
         _refuse_torn_file_append(
             spark, path, "MinHashLSHDeduplicator.load_index")
         self._check_manifest(spark, path)
-        return {"signatures": spark.read.parquet(f"{path}/signatures"),
-                "buckets": spark.read.parquet(f"{path}/buckets"),
+        return {"signatures": _read_store(spark, f"{path}/signatures"),
+                "buckets": _read_store(spark, f"{path}/buckets"),
                 "tombstones": _read_tombstones(spark, path)}
 
     def delete_from_index(self, ids: DataFrame, path: str,
@@ -511,17 +512,17 @@ class MinHashLSHDeduplicator(Transformer):
         ts = _read_tombstones(spark, path)
         if ts is None:
             return 0
-        sigs = spark.read.parquet(f"{path}/signatures")
-        before = sigs.count()
+        sigs = _read_store(spark, f"{path}/signatures")
+        before = _parquet_row_count(spark, f"{path}/signatures")
         _replace_flat_store(
             _drop_tombstoned(sigs, ts, "__id"), f"{path}/signatures")
         keep_b = (_drop_tombstoned(
-            spark.read.parquet(f"{path}/buckets"), ts, "__id")
+            _read_store(spark, f"{path}/buckets"), ts, "__id")
             .repartition(F.col("__bandhash"))
             .sortWithinPartitions("__band", "__bandhash"))
         _replace_flat_store(keep_b, f"{path}/buckets")
         _clear_tombstones(spark, path)
-        return before - spark.read.parquet(f"{path}/signatures").count()
+        return before - _parquet_row_count(spark, f"{path}/signatures")
 
     def match_against_index(self, index: dict,
                             new_docs: DataFrame) -> DataFrame:
@@ -776,7 +777,7 @@ class FingerprintIndexMixin:
             spark, path, f"{type(self).__name__}.load_index")
         self._check_manifest(spark, path)
         return {"fingerprints":
-                spark.read.parquet(f"{path}/fingerprints"),
+                _read_store(spark, f"{path}/fingerprints"),
                 "tombstones": _read_tombstones(spark, path)}
 
     def delete_from_index(self, ids: DataFrame, path: str,
@@ -796,13 +797,12 @@ class FingerprintIndexMixin:
         ts = _read_tombstones(spark, path)
         if ts is None:
             return 0
-        fps = spark.read.parquet(f"{path}/fingerprints")
-        before = fps.count()
+        fps = _read_store(spark, f"{path}/fingerprints")
+        before = _parquet_row_count(spark, f"{path}/fingerprints")
         _replace_flat_store(_drop_tombstoned(fps, ts, "__id"),
                             f"{path}/fingerprints")
         _clear_tombstones(spark, path)
-        return before - spark.read.parquet(
-            f"{path}/fingerprints").count()
+        return before - _parquet_row_count(spark, f"{path}/fingerprints")
 
     def match_against_index(self, index: dict,
                             new_rows: DataFrame) -> DataFrame:
@@ -1396,8 +1396,8 @@ class EmbeddingDeduplicator(Transformer):
         _refuse_torn_file_append(
             spark, path, "EmbeddingDeduplicator.load_index")
         man = self._check_manifest(spark, path)
-        return {"vectors": spark.read.parquet(f"{path}/vectors"),
-                "buckets": spark.read.parquet(f"{path}/buckets"),
+        return {"vectors": _read_store(spark, f"{path}/vectors"),
+                "buckets": _read_store(spark, f"{path}/buckets"),
                 "dim": int(man["dim"]),
                 "tombstones": _read_tombstones(spark, path)}
 
@@ -1423,17 +1423,17 @@ class EmbeddingDeduplicator(Transformer):
         ts = _read_tombstones(spark, path)
         if ts is None:
             return 0
-        vecs = spark.read.parquet(f"{path}/vectors")
-        before = vecs.count()
+        vecs = _read_store(spark, f"{path}/vectors")
+        before = _parquet_row_count(spark, f"{path}/vectors")
         _replace_flat_store(_drop_tombstoned(vecs, ts, "__id"),
                             f"{path}/vectors")
         keep_b = (_drop_tombstoned(
-            spark.read.parquet(f"{path}/buckets"), ts, "__id")
+            _read_store(spark, f"{path}/buckets"), ts, "__id")
             .repartition(F.col("__id"))
             .sortWithinPartitions("__band", "__chunk"))
         _replace_flat_store(keep_b, f"{path}/buckets")
         _clear_tombstones(spark, path)
-        return before - spark.read.parquet(f"{path}/vectors").count()
+        return before - _parquet_row_count(spark, f"{path}/vectors")
 
     def match_against_index(self, index: dict,
                             new_docs: DataFrame) -> DataFrame:
@@ -2025,7 +2025,7 @@ class IncrementalDeduplicator(Transformer):
         self._write_hash_rows(self._hashed(docs), path, mode)
         if self.bloomBits:
             (self._bloom_word_rows(
-                spark.read.parquet(f"{path}/hashes"), "__h1")
+                _read_store(spark, f"{path}/hashes"), "__h1")
              .write.mode("overwrite").parquet(f"{path}/bloom"))
         _fs_write_text(spark, f"{path}/_exact_manifest.json",
                        _json.dumps({"version": 1,
@@ -2105,7 +2105,7 @@ class IncrementalDeduplicator(Transformer):
             # duplicates would be silently missed until a compaction
             # rebuilt the bitset.
             if self.bloomBits:
-                merged = (spark.read.parquet(f"{path}/bloom")
+                merged = (_read_store(spark, f"{path}/bloom")
                           .unionByName(self._bloom_word_rows(hn, "__h1"))
                           .groupBy("__w")
                           .agg(F.bit_or("__bits").alias("__bits")))
@@ -2124,12 +2124,12 @@ class IncrementalDeduplicator(Transformer):
         so each match pays a LocalTableScan broadcast, never a
         densify or a plan-bloating array literal."""
         self._check_manifest(spark, path)
-        idx = {"hashes": spark.read.parquet(f"{path}/hashes"),
+        idx = {"hashes": _read_store(spark, f"{path}/hashes"),
                "tombstones": _read_tombstones(spark, path),
                "bloom_row": None}
         if self.bloomBits:
             idx["bloom_row"] = self._bloom_dense_row(
-                spark.read.parquet(f"{path}/bloom"))
+                _read_store(spark, f"{path}/bloom"))
         return idx
 
     def delete_from_index(self, ids: DataFrame, path: str,
@@ -2169,7 +2169,7 @@ class IncrementalDeduplicator(Transformer):
         if man.get("bloomBits"):
             if after:
                 rebuilt = self._bloom_word_rows(
-                    spark.read.parquet(f"{path}/hashes"), "__h1",
+                    _read_store(spark, f"{path}/hashes"), "__h1",
                     bits=man["bloomBits"], k=man["bloomHashes"])
             else:
                 # every doc was tombstoned: the store is the keeper's

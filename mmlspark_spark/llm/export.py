@@ -34,16 +34,20 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mmlspark_spark.llm.index_common import (
+    _hadoop_fs,
+    _jvm_attr,
+    _read_store,
+)
+
 
 def _fs_write_text(spark: SparkSession, path: str, content: str) -> None:
     """Write a small text file through the Hadoop FileSystem API —
     works for every scheme Spark can write parquet to (local, HDFS,
     s3a, abfs). A driver-local ``open()`` would succeed for the data
     and then fail for the manifest on any remote path."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
+    fs, P = _hadoop_fs(spark, path)
+    out = fs.create(P(path), True)
     try:
         out.write(bytearray(content.encode("utf-8")))
     finally:
@@ -51,12 +55,11 @@ def _fs_write_text(spark: SparkSession, path: str, content: str) -> None:
 
 
 def _fs_read_text(spark: SparkSession, path: str) -> str:
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(jpath)
+    fs, P = _hadoop_fs(spark, path)
+    stream = fs.open(P(path))
     try:
-        return jvm.org.apache.commons.io.IOUtils.toString(
+        return _jvm_attr(spark._jvm,
+                         "org.apache.commons.io.IOUtils.toString")(
             stream, "UTF-8")
     finally:
         stream.close()
@@ -121,7 +124,7 @@ def write_training_shards(df: DataFrame, path: str, numShards: int,
     writer.parquet(path)
 
     spark = df.sparkSession
-    written = spark.read.parquet(path)
+    written = _read_store(spark, path)
     stats = (written.groupBy("shard")
              .agg(F.count("*").alias("rows"),
                   _content_checksum(written).alias("checksum"))
@@ -142,7 +145,7 @@ def read_training_shard(spark: SparkSession, path: str,
                         shard: int) -> DataFrame:
     """Read one shard back, partition-pruned: the ``shard=<i>``
     directory filter never touches the other shards' files."""
-    return (spark.read.parquet(path)
+    return (_read_store(spark, path)
             .filter(F.col("shard") == shard).drop("shard"))
 
 
@@ -153,7 +156,7 @@ def verify_training_shards(spark: SparkSession, path: str) -> dict:
     no id column is needed (shard membership is re-derivable from
     ``shard_assignment`` if a caller wants to audit placement)."""
     stored = json.loads(_fs_read_text(spark, f"{path}/_manifest.json"))
-    written = spark.read.parquet(path)
+    written = _read_store(spark, path)
     live = (written.groupBy("shard")
             .agg(F.count("*").alias("rows"),
                  _content_checksum(written).alias("checksum"))

@@ -22,18 +22,26 @@ recovery property (some complete copy always present) holds there too.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+@functools.lru_cache(maxsize=None)
+def _jvm_attr(jvm, dotted: str):
+    """``jvm.<dotted>`` — a JVM class or static method — looked up
+    once per gateway: py4j pays one round trip per dotted segment on
+    every lookup otherwise (five for ``org.apache.hadoop.fs.Path``)."""
+    return functools.reduce(getattr, dotted.split("."), jvm)
+
+
 def _hadoop_fs(spark, path: str):
     """(fs, Path-class) for ``path``'s scheme via the Hadoop FS API —
     works on every store the index itself can live on."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return (jpath.getFileSystem(spark._jsc.hadoopConfiguration()),
-            jvm.org.apache.hadoop.fs.Path)
+    P = _jvm_attr(spark._jvm, "org.apache.hadoop.fs.Path")
+    return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
 
 
 def _add_tombstones(ids: DataFrame, path: str, idCol: str) -> None:
@@ -63,7 +71,7 @@ def _read_tombstones(spark, path: str) -> DataFrame | None:
     fs, P = _hadoop_fs(spark, f"{path}/tombstones")
     if not fs.exists(P(f"{path}/tombstones")):
         return None
-    df = spark.read.parquet(f"{path}/tombstones").select("id")
+    df = _read_store(spark, f"{path}/tombstones").select("id")
     try:
         df._mmlspark_ts_bytes = int(
             fs.getContentSummary(P(f"{path}/tombstones")).getLength())
@@ -425,7 +433,7 @@ def _compact_partitioned_store(spark, store_path: str, ts: DataFrame,
     bitsets, stats rows) is rebuilt. Returns the number of affected
     partitions."""
     dead = ts.withColumnRenamed("id", idCol)
-    store = spark.read.parquet(store_path)
+    store = _read_store(spark, store_path)
     affected = [r[0] for r in store.join(dead, idCol, "left_semi")
                 .select(partCol).distinct().collect()]
     if not affected:
@@ -482,6 +490,25 @@ def _compact_partitioned_store(spark, store_path: str, ts: DataFrame,
     return len(affected)
 
 
+def _visible_files(fs, P, dir_path: str):
+    """(name, FileStatus) of every file under ``dir_path`` that
+    Spark's reader would see, by its hidden-path rule
+    (``HadoopFSUtils.shouldFilterOutPathName``): names that start with
+    ``.``, end in ``._COPYING_``, or start with ``_`` without holding
+    ``=`` are skipped and never descended into — so ``_SUCCESS`` and a
+    killed write's ``_temporary/`` are invisible while the IVF
+    ``__cell=N`` partition directories are data."""
+    for st in fs.listStatus(P(dir_path)):
+        name = st.getPath().getName()
+        if (name.startswith(".") or name.endswith("._COPYING_")
+                or (name.startswith("_") and "=" not in name)):
+            continue
+        if st.isDirectory():
+            yield from _visible_files(fs, P, st.getPath().toString())
+        else:
+            yield name, st
+
+
 def _parquet_row_count(spark, dir_path: str) -> int:
     """Row count of a parquet store from FOOTER metadata only —
     recursive file listing + one footer read per file, O(files), no
@@ -490,24 +517,70 @@ def _parquet_row_count(spark, dir_path: str) -> int:
     ``spark.read.parquet(...).count()`` paid a full scan per store
     (row-group metadata pruning still schedules the files), while
     footers are a few KB each. Works on partitioned stores (the IVF
-    ``__cell=N`` layout) because the listing recurses."""
-    jvm = spark._jvm
+    ``__cell=N`` layout) because the listing recurses, and counts
+    exactly the files a Spark read would scan (never a killed write's
+    ``_temporary/`` litter)."""
+    open_ = _jvm_attr(spark._jvm,
+                      "org.apache.parquet.hadoop.ParquetFileReader.open")
+    from_status = _jvm_attr(
+        spark._jvm,
+        "org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus")
     fs, P = _hadoop_fs(spark, dir_path)
     conf = spark._jsc.hadoopConfiguration()
     total = 0
-    it = fs.listFiles(P(dir_path), True)
-    while it.hasNext():
-        st = it.next()
-        if not st.getPath().getName().endswith(".parquet"):
+    for name, st in _visible_files(fs, P, dir_path):
+        if not name.endswith(".parquet"):
             continue
-        rd = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-            jvm.org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, conf))
+        rd = open_(from_status(st, conf))
         try:
             total += rd.getRecordCount()
         finally:
             rd.close()
     return total
+
+
+# The footer key under which Spark's parquet writer stamps the Catalyst
+# schema of the rows it wrote (ParquetReadSupport.SPARK_METADATA_KEY).
+# Schema inference reads this same key from one footer, so handing it
+# back to the reader yields the schema inference would have found.
+_SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_store(spark, path: str) -> DataFrame:
+    """Read a parquet store the engine wrote, with the schema stamped
+    in its own footer. A schema-less ``spark.read.parquet`` infers the
+    schema with a one-task Spark job (``mergeSchemasInParallel``) that
+    reads that very footer key — a job on every load, append, compact
+    and search. Here one listing glob and one footer read happen on
+    the driver instead: no job, 25 py4j round trips with the read.
+
+    The footer is the first ``part-*`` file by path, directly under
+    ``path`` or one partition level down under Spark's hidden-path
+    rule (``__cell=N`` counts, ``_temporary`` does not); the reader
+    still discovers partition columns from the directory names. A
+    missing, empty or foreign directory — no data file carrying the
+    key — falls back to the plain read, so its errors stay the ones
+    Spark always raised."""
+    conf = spark._jsc.hadoopConfiguration()
+    P = _jvm_attr(spark._jvm, "org.apache.hadoop.fs.Path")
+    # Hadoop sorts glob results by path, as Spark sorts the files it
+    # takes the footer from; empty (or None) when nothing matches
+    found = (P(path).getFileSystem(conf)
+             .globStatus(P(f"{path}/{{part-*,{{[!._]*,_*=*}}/part-*}}")))
+    if not found:
+        return spark.read.parquet(path)
+    try:
+        read_footer = _jvm_attr(
+            spark._jvm,
+            "org.apache.parquet.hadoop.ParquetFileReader.readFooter")
+        meta = (read_footer(conf, found[0]).getFileMetaData()
+                .getKeyValueMetaData().get(_SPARK_ROW_METADATA))
+        schema = T._parse_datatype_json_string(meta)
+    except Exception:
+        # unreadable footer or no Spark schema key: not an engine
+        # store, so the reader's own inference (and error) decides
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 _MANIFEST_NAMES = (
@@ -565,8 +638,8 @@ def index_info(spark, path: str) -> dict:
             stores[name] = _parquet_row_count(spark, f"{path}/{name}")
         except Exception:
             try:
-                stores[name] = spark.read.parquet(
-                    f"{path}/{name}").count()
+                stores[name] = _read_store(
+                    spark, f"{path}/{name}").count()
             except Exception:
                 # unreadable store — surfaced, not hidden
                 stores[name] = -1

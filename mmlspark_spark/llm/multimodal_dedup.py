@@ -67,6 +67,8 @@ from mmlspark_spark.llm.index_common import (
     _commit_file_append,
     _drop_tombstoned,
     _file_append_committed,
+    _parquet_row_count,
+    _read_store,
     _read_tombstones,
     _refuse_save_over_torn_append,
     _refuse_tombstoned_append,
@@ -620,8 +622,7 @@ class VideoDHashDeduplicator(Transformer):
              .sortWithinPartitions("__fh")
              .write.mode(mode).parquet(f"{path}/frames"))
             sized = (fh if mode == "append"
-                     else docs.sparkSession.read.parquet(
-                         f"{path}/frames"))
+                     else _read_store(docs.sparkSession, f"{path}/frames"))
             (sized.groupBy("__id").agg(F.count("*").alias("__n"))
              .write.mode(mode).parquet(f"{path}/sizes"))
         finally:
@@ -670,8 +671,8 @@ class VideoDHashDeduplicator(Transformer):
         _refuse_torn_file_append(
             spark, path, "VideoDHashDeduplicator.load_index")
         self._check_manifest(spark, path)
-        return {"frames": spark.read.parquet(f"{path}/frames"),
-                "sizes": spark.read.parquet(f"{path}/sizes"),
+        return {"frames": _read_store(spark, f"{path}/frames"),
+                "sizes": _read_store(spark, f"{path}/sizes"),
                 "tombstones": _read_tombstones(spark, path)}
 
     def delete_from_index(self, ids: DataFrame, path: str,
@@ -691,16 +692,16 @@ class VideoDHashDeduplicator(Transformer):
         ts = _read_tombstones(spark, path)
         if ts is None:
             return 0
-        sizes = spark.read.parquet(f"{path}/sizes")
-        before = sizes.count()
+        sizes = _read_store(spark, f"{path}/sizes")
+        before = _parquet_row_count(spark, f"{path}/sizes")
         keep_f = (_drop_tombstoned(
-            spark.read.parquet(f"{path}/frames"), ts, "__id")
+            _read_store(spark, f"{path}/frames"), ts, "__id")
             .repartition(F.col("__fh")).sortWithinPartitions("__fh"))
         _replace_flat_store(keep_f, f"{path}/frames")
         _replace_flat_store(_drop_tombstoned(sizes, ts, "__id"),
                             f"{path}/sizes")
         _clear_tombstones(spark, path)
-        return before - spark.read.parquet(f"{path}/sizes").count()
+        return before - _parquet_row_count(spark, f"{path}/sizes")
 
     def match_against_index(self, index: dict,
                             new_docs: DataFrame) -> DataFrame:

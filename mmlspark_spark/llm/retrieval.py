@@ -47,6 +47,7 @@ from mmlspark_spark.llm.index_common import (
     _clear_tombstones,
     _drop_tombstoned,
     _hadoop_fs,
+    _read_store,
     _read_tombstones,
     _refuse_tombstoned_append,
     _replace_flat_store,
@@ -405,7 +406,7 @@ class BM25Retriever:
                 self._doclens(docs).write.mode(mode).parquet(
                     f"{path}/doclens")
                 (self._stats_from_doclens(
-                    spark.read.parquet(f"{path}/doclens"))
+                    _read_store(spark, f"{path}/doclens"))
                  .write.mode(mode).parquet(f"{path}/stats"))
 
             def postings_write() -> None:
@@ -448,7 +449,7 @@ class BM25Retriever:
             return
         self._doclens(docs).write.mode(mode).parquet(f"{path}/doclens")
         stats_src = self._stats_from_doclens(
-            docs.sparkSession.read.parquet(f"{path}/doclens"))
+            _read_store(docs.sparkSession, f"{path}/doclens"))
         post, dfreq, stats, cached = self._index_frames(
             docs, post=post_src, stats=stats_src)
         # post is the full corpus tokenize/explode pass and has 2-3
@@ -554,7 +555,7 @@ class BM25Retriever:
                 f"postings under the OLD corpus size, so an appended "
                 f"index cannot equal a fresh build — rebuild with "
                 f"save_index instead")
-        old_stats = spark.read.parquet(f"{path}/stats")
+        old_stats = _read_store(spark, f"{path}/stats")
         if "__sumdl" not in old_stats.columns:
             raise ValueError(
                 f"BM25 index at {path} predates exact-append stats "
@@ -622,7 +623,7 @@ class BM25Retriever:
             delta = new_post.groupBy("__t").agg(
                 F.count("*").alias("__df_new"))
             _replace_flat_store(
-                spark.read.parquet(f"{path}/dfreq")
+                _read_store(spark, f"{path}/dfreq")
                 .join(delta, "__t", "full_outer")
                 .select("__t",
                         (F.coalesce(F.col("__df"), F.lit(0))
@@ -768,7 +769,7 @@ class BM25Retriever:
                            "stats__staging", "stats__old"):
                 fs.delete(P(f"{path}/{litter}"), True)
             _force_flat_store(
-                spark.read.parquet(f"{path}/postings")
+                _read_store(spark, f"{path}/postings")
                 .groupBy("__t").agg(F.count("*").alias("__df")),
                 f"{path}/dfreq")
             s = marker["stats"]
@@ -806,12 +807,12 @@ class BM25Retriever:
                 f"has maxDfRatio={self.maxDfRatio} — construct the "
                 f"retriever with the index's value (the cut is baked "
                 f"into the stored postings)")
-        index = {"post": spark.read.parquet(f"{path}/postings"),
-                 "dfreq": spark.read.parquet(f"{path}/dfreq"),
-                 "stats": spark.read.parquet(f"{path}/stats"),
+        index = {"post": _read_store(spark, f"{path}/postings"),
+                 "dfreq": _read_store(spark, f"{path}/dfreq"),
+                 "stats": _read_store(spark, f"{path}/stats"),
                  "tombstones": _read_tombstones(spark, path)}
         if man.get("positions"):
-            index["positions"] = spark.read.parquet(f"{path}/positions")
+            index["positions"] = _read_store(spark, f"{path}/positions")
         return index
 
     def delete_from_index(self, ids: DataFrame, path: str,
@@ -866,7 +867,7 @@ class BM25Retriever:
                 f"BM25 index at {path} predates the doclens ledger — "
                 f"exact stats subtraction needs per-doc lengths; "
                 f"re-save the index once to upgrade")
-        doclens = spark.read.parquet(f"{path}/doclens")
+        doclens = _read_store(spark, f"{path}/doclens")
         dead = doclens.join(ts.withColumnRenamed("id", "__doc"),
                             "__doc", "left_semi").agg(
             F.count("*").alias("n"),
@@ -891,26 +892,26 @@ class BM25Retriever:
             _swap_flat_store,
         )
 
-        old = spark.read.parquet(f"{path}/stats").first()
+        old = _read_store(spark, f"{path}/stats").first()
         n = int(old["__N"]) - dead_n
         sumdl = int(old["__sumdl"] or 0) - dead_s
 
         def stage_postings_then_dfreq() -> None:
             keep_post = (_drop_tombstoned(
-                spark.read.parquet(f"{path}/postings"), ts, "__doc")
+                _read_store(spark, f"{path}/postings"), ts, "__doc")
                 .repartition(F.col("__t")).sortWithinPartitions("__t"))
             _stage_flat_store(keep_post, f"{path}/postings")
             # df from the COMPACTED postings — the same aggregate a
             # fresh build runs, read from the STAGED copy (the exact
             # rows the swap publishes), never a corpus re-tokenize
             _stage_flat_store(
-                spark.read.parquet(f"{path}/postings__staging")
+                _read_store(spark, f"{path}/postings__staging")
                 .groupBy("__t").agg(F.count("*").alias("__df")),
                 f"{path}/dfreq")
 
         def stage_positions() -> None:
             keep_pos = (_drop_tombstoned(
-                spark.read.parquet(f"{path}/positions"), ts, "__doc")
+                _read_store(spark, f"{path}/positions"), ts, "__doc")
                 .repartition(F.col("__t"))
                 .sortWithinPartitions("__t", "__doc"))
             _stage_flat_store(keep_pos, f"{path}/positions")

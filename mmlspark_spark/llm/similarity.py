@@ -38,6 +38,7 @@ from mmlspark_spark.llm.index_common import (
     _drop_tombstoned,
     _file_append_committed,
     _parquet_row_count,
+    _read_store,
     _read_tombstones,
     _refuse_save_over_torn_append,
     _refuse_tombstoned_append,
@@ -518,8 +519,8 @@ class LSHKNN:
     def load_index(self, spark, path: str) -> dict:
         _refuse_torn_file_append(spark, path, "LSHKNN.load_index")
         man = self._check_manifest(spark, path)
-        return {"bands": spark.read.parquet(f"{path}/bands"),
-                "vectors": spark.read.parquet(f"{path}/vectors"),
+        return {"bands": _read_store(spark, f"{path}/bands"),
+                "vectors": _read_store(spark, f"{path}/vectors"),
                 "dim": int(man["dim"]),
                 "tombstones": _read_tombstones(spark, path)}
 
@@ -536,17 +537,17 @@ class LSHKNN:
         ts = _read_tombstones(spark, path)
         if ts is None:
             return 0
-        vecs = spark.read.parquet(f"{path}/vectors")
-        before = vecs.count()
+        vecs = _read_store(spark, f"{path}/vectors")
+        before = _parquet_row_count(spark, f"{path}/vectors")
         _replace_flat_store(_drop_tombstoned(vecs, ts, "__id"),
                             f"{path}/vectors")
         keep_b = (_drop_tombstoned(
-            spark.read.parquet(f"{path}/bands"), ts, "d_id")
+            _read_store(spark, f"{path}/bands"), ts, "d_id")
             .repartition(F.col("d_id"))
             .sortWithinPartitions("__band", "__chunk"))
         _replace_flat_store(keep_b, f"{path}/bands")
         _clear_tombstones(spark, path)
-        return before - spark.read.parquet(f"{path}/vectors").count()
+        return before - _parquet_row_count(spark, f"{path}/vectors")
 
     def search_with_index(self, index: dict, queries: DataFrame,
                           where=None) -> DataFrame:
@@ -808,7 +809,7 @@ class IVFKNN:
             mode).parquet(f"{path}/centroids")
         spark = data.sparkSession
         assigned = self.assign_corpus(
-            data, spark.read.parquet(f"{path}/centroids"))
+            data, _read_store(spark, f"{path}/centroids"))
         # lead the sort with the partition column: the dynamic-
         # partition writer re-sorts by it anyway and would lose any
         # other order (see export.py's shard-write note)
@@ -855,7 +856,7 @@ class IVFKNN:
         # rollback covers partitioned layouts too
         _begin_file_append(spark, path, batchId)
         assigned = self.assign_corpus(
-            new_data, spark.read.parquet(f"{path}/centroids"))
+            new_data, _read_store(spark, f"{path}/centroids"))
         (assigned.repartition(F.col("__cell"))
          .sortWithinPartitions("__cell", "d_id")
          .write.mode("append").partitionBy("__cell")
@@ -864,8 +865,8 @@ class IVFKNN:
 
     def load_index(self, spark, path: str) -> dict:
         _refuse_torn_file_append(spark, path, "IVFKNN.load_index")
-        return {"assigned": spark.read.parquet(f"{path}/assigned"),
-                "centroids": spark.read.parquet(f"{path}/centroids"),
+        return {"assigned": _read_store(spark, f"{path}/assigned"),
+                "centroids": _read_store(spark, f"{path}/centroids"),
                 "tombstones": _read_tombstones(spark, path)}
 
     def delete_from_index(self, ids: DataFrame, path: str,
@@ -1258,7 +1259,7 @@ class PQKNN:
             f"{path}/codebooks")
         spark = data.sparkSession
         self.encode_with_codebooks(
-            data, spark.read.parquet(f"{path}/codebooks")
+            data, _read_store(spark, f"{path}/codebooks")
         ).write.mode(mode).parquet(f"{path}/codes")
         _fs_write_text(spark, f"{path}/_pq_manifest.json", _json.dumps(
             {"M": self.M, "K": self.K, "dim": dim, "version": 1}))
@@ -1283,8 +1284,8 @@ class PQKNN:
                 f"dim={self.dim} — codes would mis-decode")
         if self.dim is None:
             self.dim = int(man["dim"])
-        return {"codes": spark.read.parquet(f"{path}/codes"),
-                "codebooks": spark.read.parquet(f"{path}/codebooks"),
+        return {"codes": _read_store(spark, f"{path}/codes"),
+                "codebooks": _read_store(spark, f"{path}/codebooks"),
                 "tombstones": _read_tombstones(spark, path)}
 
     def delete_from_index(self, ids: DataFrame, path: str,
@@ -1304,13 +1305,13 @@ class PQKNN:
         ts = _read_tombstones(spark, path)
         if ts is None:
             return 0
-        codes = spark.read.parquet(f"{path}/codes")
-        before = codes.count()
+        codes = _read_store(spark, f"{path}/codes")
+        before = _parquet_row_count(spark, f"{path}/codes")
         keep = codes.join(ts.withColumnRenamed("id", "vec_id"),
                           "vec_id", "left_anti")
         _replace_flat_store(keep, f"{path}/codes")
         _clear_tombstones(spark, path)
-        return before - spark.read.parquet(f"{path}/codes").count()
+        return before - _parquet_row_count(spark, f"{path}/codes")
 
     def search_with_index(self, index: dict,
                           queries: DataFrame) -> DataFrame:
@@ -1548,8 +1549,8 @@ class PQKNN:
                          F.col(codeCol).alias("code"),
                          F.col(cvecCol).alias("cvec")).write.mode(
             mode).parquet(f"{path}/codebooks")
-        saved_c = spark.read.parquet(f"{path}/centroids")
-        saved_b = spark.read.parquet(f"{path}/codebooks")
+        saved_c = _read_store(spark, f"{path}/centroids")
+        saved_b = _read_store(spark, f"{path}/codebooks")
         # footer-only count (no Spark job): the centroids store was
         # just written, and the manifest only needs its row count
         nlist = _parquet_row_count(spark, f"{path}/centroids")
@@ -1623,8 +1624,8 @@ class PQKNN:
             "append_to_ivfpq_index")
         _begin_file_append(spark, path, batchId)
         codes = self.ivfpq_assign_encode(
-            new_data, spark.read.parquet(f"{path}/centroids"),
-            spark.read.parquet(f"{path}/codebooks"))
+            new_data, _read_store(spark, f"{path}/centroids"),
+            _read_store(spark, f"{path}/codebooks"))
         (codes.repartition(F.col("__cell"))
          .sortWithinPartitions("__cell", "d_id")
          .write.mode("append").partitionBy("__cell")
@@ -1655,9 +1656,9 @@ class PQKNN:
                 f"residual codes; this retriever has dim={self.dim}")
         if self.dim is None:
             self.dim = int(man["dim"])
-        return {"codes": spark.read.parquet(f"{path}/codes"),
-                "centroids": spark.read.parquet(f"{path}/centroids"),
-                "codebooks": spark.read.parquet(f"{path}/codebooks"),
+        return {"codes": _read_store(spark, f"{path}/codes"),
+                "centroids": _read_store(spark, f"{path}/centroids"),
+                "codebooks": _read_store(spark, f"{path}/codebooks"),
                 "dim": int(man["dim"]),
                 "tombstones": _read_tombstones(spark, path)}
 
@@ -1981,7 +1982,7 @@ class ScalarQuantizerKNN:
         bounds = self.fit_bounds(data)
         bounds.write.mode(mode).parquet(f"{path}/bounds")
         spark = data.sparkSession
-        saved_bounds = spark.read.parquet(f"{path}/bounds")
+        saved_bounds = _read_store(spark, f"{path}/bounds")
         self.encode_with_bounds(data, saved_bounds).write.mode(
             mode).parquet(f"{path}/codes")
         _fs_write_text(spark, f"{path}/_sq_manifest.json", _json.dumps(
@@ -2018,8 +2019,8 @@ class ScalarQuantizerKNN:
                 f"distances")
         if self.dim is None:
             self.dim = int(man["dim"])
-        return {"codes": spark.read.parquet(f"{path}/codes"),
-                "bounds": spark.read.parquet(f"{path}/bounds"),
+        return {"codes": _read_store(spark, f"{path}/codes"),
+                "bounds": _read_store(spark, f"{path}/bounds"),
                 "tombstones": _read_tombstones(spark, path)}
 
     def append_to_index(self, new_data: DataFrame, path: str,
@@ -2067,7 +2068,7 @@ class ScalarQuantizerKNN:
         _refuse_tombstoned_append(
             new_data.select(F.col(self.idCol)), path, self.idCol,
             "ScalarQuantizerKNN.append_to_index")
-        saved_bounds = spark.read.parquet(f"{path}/bounds")
+        saved_bounds = _read_store(spark, f"{path}/bounds")
         # shared file-append bracket: the encode lands as new files
         # in the flat code store; a killed write job's partial
         # part-file set rolls back bit-exactly
@@ -2096,13 +2097,13 @@ class ScalarQuantizerKNN:
         ts = _read_tombstones(spark, path)
         if ts is None:
             return 0
-        codes = spark.read.parquet(f"{path}/codes")
-        before = codes.count()
+        codes = _read_store(spark, f"{path}/codes")
+        before = _parquet_row_count(spark, f"{path}/codes")
         keep = codes.join(ts.withColumnRenamed("id", "vec_id"),
                           "vec_id", "left_anti")
         _replace_flat_store(keep, f"{path}/codes")
         _clear_tombstones(spark, path)
-        return before - spark.read.parquet(f"{path}/codes").count()
+        return before - _parquet_row_count(spark, f"{path}/codes")
 
     def search_with_index(self, index: dict,
                           queries: DataFrame) -> DataFrame:

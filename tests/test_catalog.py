@@ -389,6 +389,18 @@ def test_window_priority_order_is_respected():
                for n in tail[:first_rows_only])
 
 
+def test_window_priority_names_are_registered():
+    """_ordered_specs ranks only names it finds in CATALOG: a misspelt
+    _WINDOW_PRIORITY entry is dropped without a word and its slot is
+    refilled in registration order, so the query the window was
+    re-planned to carry silently misses its driver round. Every
+    priority name must be a registered query, and listed once."""
+    from mmlspark_spark.plans.catalog import _WINDOW_PRIORITY
+
+    assert [n for n in _WINDOW_PRIORITY if n not in CATALOG] == []
+    assert len(set(_WINDOW_PRIORITY)) == len(_WINDOW_PRIORITY)
+
+
 def test_readme_counts_in_sync():
     """README.md advertises the driver-contract query/oracle counts;
     they went two rounds stale in r8/r9, so the claim is now pinned to
